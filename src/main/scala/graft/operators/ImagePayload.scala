@@ -154,14 +154,6 @@ object ImagePayload {
       math.sqrt(math.max(0, sl2 / n - meanL * meanL)).toFloat)
   }
 
-  /** STUB: video frame sampling. No video codecs exist in this container;
-    * a real deployment would decode via a bundled codec inside
-    * `mapPartitions` exactly like the image ops. Here each "frame" is the
-    * deterministic raster at (key + frameIdx), PNG-encoded, preserving the
-    * schema/batching contract of the real operator. */
-  def sampleFramesStub(key: Long, nFrames: Int, w: Int, h: Int): Array[Array[Byte]] =
-    Array.tabulate(nFrames)(i => encodePng(key + i, w, h))
-
   /** Perceptual dHash: real decode, bilinear downsample to a 9x8 luminance
     * grid, 64 bits of horizontal gradient sign. Visually-near images
     * (re-encodes, small patches) differ in few bits; unrelated rasters

@@ -131,14 +131,6 @@ object Similarity {
     Seq.fill(bits)(IndexedSeq.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Random-hyperplane signature: bit i = sign(dot(vec, plane_i)). For unit
-    * vectors P(bit agrees) = 1 - theta/pi, the classic cosine LSH. */
-  def hyperplaneBucket(vec: Column, planes: Seq[IndexedSeq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit): _*)
-      when(dot(vec, planeCol) > 0, lit(1L << i)).otherwise(0L)
-    }.reduce[Column](_ bitwiseOR _)
-
   private def vecDim(embeddings: DataFrame, vecCol: String): Int =
     embeddings.select(size(col(vecCol))).head().getInt(0)
 
@@ -430,14 +422,20 @@ object Similarity {
   /** Delete every version directory except the live one, plus the legacy
     * flat `centroids`/`codebook`/`lists` dirs once a pointer exists —
     * the orphans a crash between publish and cleanup (or mid-rebuild)
-    * leaves behind. Caller holds the writer lock. */
+    * leaves behind — and the loose files a crash strands: a publish's
+    * `_current.tmp.*` pointer and a lock reclaim's
+    * `_writer.lock.claimed.*` graveyard file. Caller holds the writer
+    * lock, so no live writer can still own either kind of file. */
   private def sweepOrphanVersions(indexDir: String): Unit = {
+    val entries = Option(new java.io.File(indexDir).listFiles()).getOrElse(Array.empty)
+    entries.filter(f => f.isFile && (f.getName.startsWith("_current.tmp.") ||
+        f.getName.startsWith("_writer.lock.claimed.")))
+      .foreach(delete)
     val p = currentPointer(indexDir)
     if (java.nio.file.Files.exists(p)) {
       val live = new String(java.nio.file.Files.readAllBytes(p),
         java.nio.charset.StandardCharsets.UTF_8).trim
-      val root = new java.io.File(indexDir)
-      Option(root.listFiles()).getOrElse(Array.empty)
+      entries
         .filter(f => f.isDirectory && f.getName != live &&
           (f.getName.matches("v\\d+") ||
             Set("centroids", "codebook", "lists")(f.getName)))
@@ -961,50 +959,56 @@ object Similarity {
   // declared floor — a silent-degradation query is impossible, the
   // property a fleet-scale ANN deployment actually monitors.
 
+  /** `recall_ok` of a gate: true when hits / n >= `floor`, otherwise a
+    * raised error. An empty exact set has no recall and raises its own
+    * error rather than a "below floor" one. */
+  private def recallOk(hits: Column, n: Column, floor: Double, what: String): Column = {
+    val recall = hits.cast("double") / when(n > 0, n)
+    when(n === 0, raise_error(lit(s"$what gate: exact result set is empty")).cast("boolean"))
+      .when(recall >= floor, lit(true))
+      .otherwise(raise_error(concat(lit(s"$what "), format_number(recall, 3),
+        lit(s" below declared floor $floor"))).cast("boolean"))
+  }
+
   /** Gate an approximate top-k result against the exact one: both frames
-    * are (query_id, neighbor_id) relations over the same query set.
+    * are (query_id, neighbor_id) relations over the same query set, each
+    * deduplicated here so a repeated row cannot count as a second hit.
     * Output is ONE deterministic row (n_queries, k, recall_floor,
-    * recall_ok=true); if overall recall < `floor` the query raises
-    * instead of returning. */
+    * recall_ok=true); if overall recall < `floor`, or the exact set is
+    * empty, the query raises instead of returning. */
   def recallGate(approx: DataFrame, exact: DataFrame, k: Int,
                  floor: Double): DataFrame = {
-    val hits = approx.join(exact, Seq("query_id", "neighbor_id"))
+    val keys = Seq("query_id", "neighbor_id")
+    val ex = exact.select(keys.map(col): _*).distinct()
+    val hits = approx.select(keys.map(col): _*).distinct().join(ex, keys)
       .agg(count(lit(1)).as("__hits"))
-    val tot = exact.agg(countDistinct(col("query_id")).as("n_queries"),
+    val tot = ex.agg(countDistinct(col("query_id")).as("n_queries"),
       count(lit(1)).as("__n"))
     tot.crossJoin(hits)
-      .withColumn("__recall", col("__hits").cast("double") / col("__n"))
       .select(col("n_queries"), lit(k).as("k"),
         lit(floor).as("recall_floor"),
-        when(col("__recall") >= floor, lit(true))
-          .otherwise(raise_error(concat(lit("ANN recall "),
-            format_number(col("__recall"), 3),
-            lit(s" below declared floor $floor"))).cast("boolean"))
-          .as("recall_ok"))
+        recallOk(col("__hits"), col("__n"), floor, "ANN recall").as("recall_ok"))
   }
 
   /** Gate an approximate pair-finding result (id_a, id_b) against the
     * exact pair set on BOTH axes: recall >= `floor` AND precision == 1
     * (every emitted pair must be exact-verified — the LSH paths re-check
     * the true cosine, so a single spurious pair means the verify stage
-    * broke). One deterministic row (n_exact_pairs, recall_floor,
-    * recall_ok=true, precision_ok=true) or a raised error. */
+    * broke). Both sets are deduplicated first. One deterministic row
+    * (n_exact_pairs, recall_floor, recall_ok=true, precision_ok=true) or
+    * a raised error. */
   def pairRecallGate(approx: DataFrame, exact: DataFrame,
                      floor: Double): DataFrame = {
-    val hits = approx.join(exact, Seq("id_a", "id_b"))
-      .agg(count(lit(1)).as("__hits"))
-    val spurious = approx.join(exact, Seq("id_a", "id_b"), "left_anti")
-      .agg(count(lit(1)).as("__bad"))
-    exact.agg(count(lit(1)).as("n_exact_pairs"))
+    val keys = Seq("id_a", "id_b")
+    val ap = approx.select(keys.map(col): _*).distinct()
+    val ex = exact.select(keys.map(col): _*).distinct()
+    val hits = ap.join(ex, keys).agg(count(lit(1)).as("__hits"))
+    val spurious = ap.join(ex, keys, "left_anti").agg(count(lit(1)).as("__bad"))
+    ex.agg(count(lit(1)).as("n_exact_pairs"))
       .crossJoin(hits).crossJoin(spurious)
-      .withColumn("__recall", col("__hits").cast("double") / col("n_exact_pairs"))
       .select(col("n_exact_pairs"),
         lit(floor).as("recall_floor"),
-        when(col("__recall") >= floor, lit(true))
-          .otherwise(raise_error(concat(lit("pair recall "),
-            format_number(col("__recall"), 3),
-            lit(s" below declared floor $floor"))).cast("boolean"))
-          .as("recall_ok"),
+        recallOk(col("__hits"), col("n_exact_pairs"), floor, "pair recall").as("recall_ok"),
         when(col("__bad") === 0, lit(true))
           .otherwise(raise_error(concat(lit("unverified pairs emitted: "),
             col("__bad").cast("string"))).cast("boolean"))

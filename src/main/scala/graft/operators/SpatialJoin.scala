@@ -99,8 +99,7 @@ object SpatialJoin {
               latCol: String,
               lonCol: String,
               regions: Seq[(String, S2Region)],
-              maxCells: Int = 64,
-              prefilter: Boolean = true): DataFrame = {
+              maxCells: Int = 64): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
 
@@ -122,28 +121,26 @@ object SpatialJoin {
 
     // Lat band + (when not antimeridian-wrapping) lng band from the union of
     // region bounds: plain comparisons Catalyst pushes into the scan.
-    val pre: DataFrame =
-      if (!prefilter) points
+    val pre: DataFrame = {
+      val bound = regions.map(_._2.rectBound).reduce(_ union _)
+      if (bound.lat.isEmpty) points.limit(0)
       else {
-        val bound = regions.map(_._2.rectBound).reduce(_ union _)
-        if (bound.lat.isEmpty) points.limit(0)
-        else {
-          val latLo = math.toDegrees(bound.lat.lo)
-          val latHi = math.toDegrees(bound.lat.hi)
-          val latPred = col(latCol) >= latLo && col(latCol) <= latHi
-          val pred =
-            if (bound.lng.isFull) latPred
-            else {
-              val lngLo = math.toDegrees(bound.lng.lo)
-              val lngHi = math.toDegrees(bound.lng.hi)
-              if (bound.lng.isInverted)
-                latPred && (col(lonCol) >= lngLo || col(lonCol) <= lngHi)
-              else
-                latPred && col(lonCol) >= lngLo && col(lonCol) <= lngHi
-            }
-          points.where(pred)
-        }
+        val latLo = math.toDegrees(bound.lat.lo)
+        val latHi = math.toDegrees(bound.lat.hi)
+        val latPred = col(latCol) >= latLo && col(latCol) <= latHi
+        val pred =
+          if (bound.lng.isFull) latPred
+          else {
+            val lngLo = math.toDegrees(bound.lng.lo)
+            val lngHi = math.toDegrees(bound.lng.hi)
+            if (bound.lng.isInverted)
+              latPred && (col(lonCol) >= lngLo || col(lonCol) <= lngHi)
+            else
+              latPred && col(lonCol) >= lngLo && col(lonCol) <= lngHi
+          }
+        points.where(pred)
       }
+    }
 
     val withLeaf = pre.withColumn("__leaf", s2_cell_id(col(latCol), col(lonCol)))
     val exploded = withLeaf

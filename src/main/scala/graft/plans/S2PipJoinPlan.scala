@@ -158,8 +158,8 @@ case class S2PipJoinExec(child: SparkPlan,
   }
 }
 
-/** Plans [[S2PipJoinPlan]] into [[S2PipJoinExec]]; injected via
-  * [[S2Extensions]] or `spark.experimental.extraStrategies`. */
+/** Plans [[S2PipJoinPlan]] into [[S2PipJoinExec]]; [[S2PipJoin.pipJoinExec]]
+  * appends it to the session's `spark.experimental.extraStrategies`. */
 object S2PipJoinStrategy extends SparkStrategy {
   import org.apache.spark.sql.execution.SparkPlan
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -170,6 +170,12 @@ class IvfRebalanceSpec extends SparkTestBase {
     val orphan = new java.io.File(idx, "v999")
     assert(orphan.mkdirs())
     java.nio.file.Files.write(orphan.toPath.resolve("junk"), Array[Byte](1, 2, 3))
+    // ... plus the loose files a crash strands: a publish's temp pointer
+    // (never moved onto _current) and a lock reclaim's graveyard file
+    val tmpPointer = new java.io.File(idx, "_current.tmp.crashed")
+    java.nio.file.Files.write(tmpPointer.toPath, "v999".getBytes)
+    val grave = new java.io.File(idx, "_writer.lock.claimed.crashed")
+    java.nio.file.Files.write(grave.toPath, Array[Byte](1))
     val got = Similarity.queryIvf(spark, idx,
       emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 3)
       .count()
@@ -179,6 +185,8 @@ class IvfRebalanceSpec extends SparkTestBase {
       (col("vec_id") + 5000000L).as("vec_id"), col("embedding")),
       "vec_id", "embedding", idx): Unit
     assert(!orphan.exists(), "locked maintenance must sweep orphan versions")
+    assert(!tmpPointer.exists(), "locked maintenance must sweep temp pointers")
+    assert(!grave.exists(), "locked maintenance must sweep lock graveyard files")
     val liveNow = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, "_current"))).trim
     assert(liveNow == live, "an append does not publish a new version")

@@ -32,14 +32,6 @@ class MultimodalSkewSpec extends SparkTestBase {
     }
   }
 
-  test("frame-sampling stub keeps the schema contract and is deterministic") {
-    val a = ImagePayload.sampleFramesStub(42L, 3, 16, 16)
-    val b = ImagePayload.sampleFramesStub(42L, 3, 16, 16)
-    assert(a.length == 3)
-    assert(a.zip(b).forall { case (x, y) => x.sameElements(y) })
-    assert(!a(0).sameElements(a(1)), "frames must differ")
-  }
-
   test("salted aggregation == direct aggregation on skewed tiles") {
     // points concentrated in one hot tile: ~50% of rows at one location
     val base = spark.range(0, 20000)

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.plans.S2PipJoin
@@ -47,5 +51,35 @@ class PipJoinExecSpec extends SparkTestBase {
     assert(df.columns.toSeq == Seq("o_orderkey", "lat", "lon", "region_id"))
     val physical = df.queryExecution.executedPlan.toString
     assert(physical.contains("S2PipJoin"), s"expected custom exec node in:\n$physical")
+  }
+
+  test("pipJoin pushes the lat band into the scan and broadcasts the covering without a shuffle") {
+    val dir = java.nio.file.Files.createTempDirectory("pip_plan").toString + "/points"
+    pointsDf.write.parquet(dir)
+    val df = graft.operators.SpatialJoin.pipJoin(spark.read.parquet(dir), "lat", "lon",
+      SparkEntryRegions.rects)
+    assert(df.collect().nonEmpty)
+    // every physical operator of the executed plan, through AQE's wrappers
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plan = nodes(df.queryExecution.executedPlan)
+    val planText = df.queryExecution.executedPlan.toString
+
+    val scans = plan.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 1, s"expected one points scan in:\n$planText")
+    val pushed = scans.head.metadata.getOrElse("PushedFilters", "")
+    assert(pushed.contains("GreaterThanOrEqual(lat,") && pushed.contains("LessThanOrEqual(lat,"),
+      s"lat band not pushed into the scan: $pushed")
+
+    val joins = plan.filter(_.getClass.getSimpleName.endsWith("JoinExec"))
+    assert(joins.size == 1 && joins.head.isInstanceOf[BroadcastHashJoinExec],
+      s"expected one BroadcastHashJoin in:\n$planText")
+    val pointsSide = joins.head.children.map(nodes)
+      .find(_.exists(_.isInstanceOf[FileSourceScanExec])).get
+    assert(!pointsSide.exists(_.isInstanceOf[Exchange]),
+      s"an exchange sits between the points scan and the join:\n$planText")
   }
 }
